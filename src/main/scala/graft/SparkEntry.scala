@@ -2,7 +2,6 @@ package graft
 
 import graft.core.QueryRequest
 import graft.functions.{Dedup, Similarity, TextAnalysis}
-import graft.model.Span
 import graft.operators.{Multimodal, SpanPipeline, TraceQueries}
 import graft.sources.EventSpans
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -234,9 +233,6 @@ object SparkEntry {
         case (k, None) => spark.conf.unset(k)
       }
     }
-
-  private def eventSpans(s: SparkSession, dir: String): Dataset[Span] =
-    EventSpans.spans(s, events(s, dir))
 
   private def eventTraces(s: SparkSession, dir: String) =
     EventSpans.sessionTraces(s, events(s, dir)) // fused single-shuffle path
@@ -546,14 +542,14 @@ object SparkEntry {
       val half = (feed.length + 1) / 2
       val batches = Seq(feed.take(half).toSeq, feed.drop(half).toSeq, dups.toSeq)
       runReplayedStream(s, "graft-sdedup", batches, 1)((ds, chk) =>
-        Dedup.exactStream(ds.toDF("doc_id", "text", "ingest_ts"),
-            Seq("text"), "ingest_ts", "365 days")
-          .writeStream.outputMode("append")
+        graft.streaming.StreamingPipeline.startShared(
+            Dedup.exactStream(ds.toDF("doc_id", "text", "ingest_ts"),
+              Seq("text"), "ingest_ts", "365 days"))(_
+          .outputMode("append")
           .option("checkpointLocation", chk)
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-          }
-          .start())
+          }))
     }
 
   /** The streaming curation store behind q_curate_stream: quality gate →
@@ -585,14 +581,14 @@ object SparkEntry {
       val half = (feed.length + 1) / 2
       val batches = Seq(feed.take(half).toSeq, feed.drop(half).toSeq, dups.toSeq)
       runReplayedStream(s, "graft-scurate", batches, 1)((ds, chk) =>
-        graft.operators.Curation.curateStream(
-            ds.toDF("doc_id", "text", "ingest_ts"), "text", "ingest_ts", "365 days")
-          .writeStream.outputMode("append")
+        graft.streaming.StreamingPipeline.startShared(
+            graft.operators.Curation.curateStream(
+              ds.toDF("doc_id", "text", "ingest_ts"), "text", "ingest_ts", "365 days"))(_
+          .outputMode("append")
           .option("checkpointLocation", chk)
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-          }
-          .start())
+          }))
     }
 
   /** Events as time-ordered span envelopes (ingest time = span time) — the

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.{Span, Spans}
-import graft.streaming.{LinkEvent, SpanEnvelope}
+import graft.streaming.{LinkEvent, SpanEnvelope, StreamingPipeline}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
@@ -132,14 +132,13 @@ object SpanSources {
     */
   def linksToJsonFiles(links: Dataset[LinkEvent], path: String,
       checkpoint: String): StreamingQuery =
-    links.toDF()
+    StreamingPipeline.startShared(links.toDF()
       .select(col("event_ts"), col("parent"), col("child"),
-        col("call_count").as("callCount"), col("error_count").as("errorCount"))
-      .writeStream.format("json")
+        col("call_count").as("callCount"), col("error_count").as("errorCount")))(_
+      .format("json")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      .outputMode("append"))
 
   /** S3: dependency-link source over the file-backed handoff — the second
     * stage's input, decoupled from the aggregation stage exactly like the

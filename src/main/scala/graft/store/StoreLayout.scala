@@ -811,12 +811,6 @@ object StoreLayout {
     compactSetStorePartitions(spark, path, keyCol, setCol,
       listPartitionDates(spark, path, "seen_date"))
 
-  /** Closed-date watermark variant of [[compactSetStore]]. */
-  def compactSetStoreBefore(spark: SparkSession, path: String, keyCol: String,
-      setCol: String, before: java.time.LocalDate): Unit =
-    compactSetStorePartitions(spark, path, keyCol, setCol,
-      listPartitionDates(spark, path, "seen_date").filter(_.isBefore(before)))
-
   /** Partition-scoped set-store compaction (the name/autocomplete twin of
     * [[compactTracePartitions]]).
     */

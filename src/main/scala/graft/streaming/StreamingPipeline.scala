@@ -6,7 +6,8 @@ import graft.core.{DependencyLinker, TraceMerge}
 import graft.model.{DependencyLink, Span, Trace}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** A span batch on the wire: the event time is the transport's record
   * timestamp (the reference sessionizes on the Kafka record timestamp —
@@ -34,6 +35,37 @@ final case class LinkEvent(event_ts: Timestamp, parent: String, child: String,
   * state retention exactly like the reference's store retention (ST6).
   */
 object StreamingPipeline {
+
+  private val artifactIsolation = "spark.sql.artifact.isolation.enabled"
+  private val startLock = new Object
+
+  /** Start an engine stream on the executor's shared classloader. Spark 4
+    * isolates session artifacts by default: every `start()` clones the
+    * session with artifact state of its own, and the executor runs that
+    * query's tasks under a classloader of its own. Spark's codegen cache is
+    * keyed by (context classloader, source), so each query would compile
+    * the same generated classes again, and six of them overflow the cache's
+    * 100 entries and recompile on every batch. The engine's queries use no
+    * session-scoped artifacts (every class they run is on the application
+    * classpath), so the stream's clone is taken with isolation off, and the
+    * caller's setting is put back once the query has started (unset if it
+    * was unset). The lock keeps two concurrent starts from restoring each
+    * other's value mid-start.
+    */
+  private[graft] def startShared[T](data: Dataset[T])(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val conf = data.sparkSession.conf
+    startLock.synchronized {
+      // getAll holds only explicit settings; getOption would report the default
+      val prev = conf.getAll.get(artifactIsolation)
+      conf.set(artifactIsolation, "false")
+      try sink(data.writeStream).start()
+      finally prev match {
+        case Some(v) => conf.set(artifactIsolation, v)
+        case None => conf.unset(artifactIsolation)
+      }
+    }
+  }
 
   /** A1/A2: session-window trace aggregation, gap = traceTimeout (default
     * 1 min, KafkaStorageBuilder.java:225), grace 0 ⇒ watermark delay 0
@@ -154,8 +186,8 @@ object StreamingPipeline {
     * unreachable by any realistic range read).
     */
   def tracesToStore(traces: Dataset[ClosedTrace], path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    traces.writeStream
+      checkpoint: String): StreamingQuery =
+    startShared(traces)(_
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[ClosedTrace], _: Long) =>
@@ -164,9 +196,7 @@ object StreamingPipeline {
           batch.toDF().select(col("trace_id"), col("spans"),
             when(col("root_ts") === 0L, unix_micros(col("close_ts")))
               .otherwise(col("root_ts")).as("root_ts")), path)
-      }
-      .start()
-  }
+      })
 
   /** Wire the windowed dependency counts into the date-partitioned serving
     * store (S6, dependency side — the analog of [[tracesToStore]]). Append
@@ -176,16 +206,15 @@ object StreamingPipeline {
     * RocksDB upsert analog) — re-summing alone would double-count them.
     */
   def dependencyWindowsToStore(windowCounts: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    windowCounts.writeStream
+      checkpoint: String): StreamingQuery =
+    startShared(windowCounts)(_
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the epoch id IS the retry-idempotence key: a replayed batch
         // repeats it, so the read-side dedup collapses exactly the retries
         graft.store.StoreLayout.writeDependencyWindows(batch, path, batchId)
-      }
-      .start()
+      })
 
   /** Envelope stream → the span-projection schema the name-store builders
     * aggregate over, so the streaming stores are the SAME expressions as the
@@ -236,14 +265,13 @@ object StreamingPipeline {
     * unaffected.
     */
   private def nameSetsToStore(sets: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    sets.writeStream
+      checkpoint: String): StreamingQuery =
+    startShared(sets)(_
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Complete)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-      .start()
+      })
 
   /** A7 span-names store → parquet (TraceStorageTopology.java:131-140). */
   def spanNamesToStore(envelopes: Dataset[SpanEnvelope], path: String,
@@ -287,14 +315,13 @@ object StreamingPipeline {
     */
   def autocompleteTagsToStoreIncremental(envelopes: Dataset[SpanEnvelope],
       keys: Seq[String], path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    envelopes.writeStream
+      checkpoint: String): StreamingQuery =
+    startShared(envelopes)(_
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[SpanEnvelope], _: Long) =>
         appendAutocompleteDelta(envelopeSpanFields(batch), keys, path)
-      }
-      .start()
+      })
 
   /** One delta-append body shared by the streaming sink's foreachBatch and
     * batch seeding/backfill (SparkEntry's q_store_autocomplete gate): the

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 import graft.model.{Endpoint, Span}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -56,6 +57,44 @@ class StreamingPipelineSpec extends SparkSpec {
       }
       spark.table(name).as[ClosedTrace].collect()
     } finally q.stop()
+  }
+
+  test("engine streams run their tasks on one shared executor classloader, " +
+      "and start() leaves the caller's artifact-isolation setting as it was") {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.artifact.isolation.enabled"
+    def setting = spark.conf.getAll.get(key)
+    val input = MemoryStream[Long]
+    val loaders = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def start(name: String) = StreamingPipeline.startShared(input.toDS())(_
+      .foreachBatch { (batch: Dataset[Long], _: Long) =>
+        batch.mapPartitions { _ =>
+          val l = Thread.currentThread.getContextClassLoader
+          Iterator(s"${l.getClass.getName}@${System.identityHashCode(l)}")
+        }.collect().foreach(l => loaders.add(name -> l))
+      })
+    val original = setting
+    val queries = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.sql.streaming.StreamingQuery]
+    try {
+      spark.conf.unset(key)
+      queries += start("unset")
+      assert(setting.isEmpty, "an unset isolation setting must stay unset")
+      spark.conf.set(key, "true")
+      queries += start("set")
+      assert(setting.contains("true"), "an explicit isolation setting must survive start()")
+      input.addData(1L, 2L, 3L)
+      queries.foreach(_.processAllAvailable())
+      import scala.jdk.CollectionConverters._
+      val byQuery = loaders.asScala.groupBy(_._1).map { case (q, ls) => q -> ls.map(_._2).toSet }
+      assert(byQuery.keySet == Set("unset", "set"))
+      assert(byQuery.values.forall(_.size == 1), byQuery)
+      assert(byQuery("unset") == byQuery("set"),
+        s"per-query classloaders split the codegen cache: $byQuery")
+    } finally {
+      queries.foreach(_.stop())
+      original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("session_window path: trace emitted once, on close, merged (A1/A2/ST4)") {
